@@ -199,7 +199,7 @@ def haversine_neighbor_count(
     converted to km at plan time (None/Default = already km)."""
     from . import units
 
-    if unit is not None:
+    if unit not in (None, "Default"):
         radius_km = units.to_world(radius_km, unit) / 1000.0
     return (
         _hav_pairs(left, right, radius_km)
@@ -220,7 +220,7 @@ def haversine_nearest_join(
     to km at plan time (None/Default = already km)."""
     from . import units
 
-    if unit is not None:
+    if unit not in (None, "Default"):
         radius_km = units.to_world(radius_km, unit) / 1000.0
     pairs = _hav_pairs(left, right, radius_km)
     return (

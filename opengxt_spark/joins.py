@@ -1204,6 +1204,21 @@ def knn_join(
             pack_p = 1 << max(int(mx_id).bit_length(), 1)
             d2m_cap = (int(radius * 1000.0) + 2) ** 2
             packed = (d2m_cap + 1) * pack_p + (pack_p - 1) < (1 << 63)
+    # The pack base comes from a (possibly persisted) probe; a right id
+    # outside [0, P) would bleed into the d2m bits and reorder neighbours
+    # silently, so every right row checks its id in-plan before the cell
+    # explode. Probes keep keying on the unguarded layer, so their cached
+    # results still hit.
+    right_pairs = right
+    if packed:
+        rid = F.col(rid_r)
+        right_pairs = right.withColumn(rid_r, F.when(
+            (rid < 0) | (rid >= F.lit(pack_p)),
+            F.raise_error(F.concat(
+                F.lit(f"knn_join: right id outside the pack range [0, {pack_p}): "),
+                rid.cast("string"),
+            )),
+        ).otherwise(rid))
 
     def _pairs(lf: DataFrame, rad: float, n_lf: int | None = None) -> DataFrame:
         # Ring-explode the smaller side — see nearest_join._pairs.
@@ -1214,7 +1229,7 @@ def knn_join(
             n_lf if side == "left" else n_r, rad, cs
         )
         p = distance_band_join(
-            lf, right, rad, cell_size=cs, strategy=strat, build=side,
+            lf, right_pairs, rad, cell_size=cs, strategy=strat, build=side,
             emit_d2m=packed, **kw
         )
         if exclude_self:
@@ -1317,7 +1332,7 @@ def knn_join(
         planner.cached_count(right), r1, cs
     )
     pairs = _band_pairs_outer(
-        left, right, r1, cs, strat,
+        left, right_pairs, r1, cs, strat,
         left_cols=lcols, right_cols=rcols, exclude_self=exclude_self,
     )
     agg = _persist_lazy(
@@ -1352,7 +1367,7 @@ def knn_join(
                 planner.cached_count(right)
             )
             fpairs = _band_pairs_flip(
-                pending, right, r, cs, strat,
+                pending, right_pairs, r, cs, strat,
                 left_cols=pcols, right_cols=rcols, exclude_self=exclude_self,
             )
             lvl1 = fpairs.groupBy("pid_l", "cell_x", "cell_y").agg(

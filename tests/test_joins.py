@@ -127,6 +127,29 @@ def test_knn_join_packed_overflow_falls_back(spark, sf_dir):
     }
 
 
+def test_knn_join_packed_stale_max_id(spark, sf_dir, monkeypatch):
+    """A stale cached max id sizes the pack base P too small: right ids
+    >= P would bleed into the distance bits of the ring schedule's packed
+    top-k. The join must fail loudly or return the true neighbours, never
+    a silently wrong answer."""
+    from opengxt_spark import planner
+
+    l = world.points_events(spark, sf_dir)
+    r = world.points_part(spark, sf_dir)
+    kw = dict(k=4, radius=50.0, exclude_self=False, mm_exact=True,
+              first_radius=20.0)  # ring path: the packed aggregate
+    ref = joins.knn_join(l, r, **kw).collect()
+    key = (planner.plan_key(r), "pid")
+    mn, mx = planner.cached_minmax(r, "pid")
+    monkeypatch.setitem(planner._MINMAX_CACHE, key, (mn, mx // 8))
+    try:
+        got = joins.knn_join(l, r, **kw).collect()
+    except Exception as e:
+        assert "pack range" in str(e)
+    else:
+        assert sorted(map(tuple, got)) == sorted(map(tuple, ref))
+
+
 def test_distance_band_symmetric_counts(spark, sf_dir):
     """Total pairs within radius must equal its transpose (join correctness)."""
     l = world.points_events(spark, sf_dir)

@@ -154,7 +154,8 @@ def test_buffer_unit(spark):
 
 def test_haversine_joins_unit(spark):
     """Geodesic surfaces accept unit= too: a radius given in Miles equals
-    the same radius pre-converted to km."""
+    the same radius pre-converted to km, and unit="Default" means km,
+    like None."""
     from opengxt_spark import geo
 
     l = spark.range(80).selectExpr(
@@ -168,10 +169,9 @@ def test_haversine_joins_unit(spark):
         "CAST((id * 29) % 60 - 30 AS DOUBLE) / 2.0 AS lat",
     )
     r_mi = 200.0
-    km = geo.haversine_nearest_join(l, r, r_mi * 1609.344 / 1000.0).collect()
-    mi = geo.haversine_nearest_join(l, r, r_mi, unit="Miles").collect()
-    assert sorted(map(tuple, km)) == sorted(map(tuple, mi))
-    assert len(km) > 0
-    km2 = geo.haversine_neighbor_count(l, r, r_mi * 1609.344 / 1000.0).collect()
-    mi2 = geo.haversine_neighbor_count(l, r, r_mi, unit="Miles").collect()
-    assert sorted(map(tuple, km2)) == sorted(map(tuple, mi2))
+    r_km = r_mi * 1609.344 / 1000.0
+    for fn in (geo.haversine_nearest_join, geo.haversine_neighbor_count):
+        km = sorted(map(tuple, fn(l, r, r_km).collect()))
+        assert len(km) > 0
+        assert sorted(map(tuple, fn(l, r, r_mi, unit="Miles").collect())) == km
+        assert sorted(map(tuple, fn(l, r, r_km, unit="Default").collect())) == km
